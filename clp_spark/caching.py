@@ -1,6 +1,16 @@
-"""Bounded, plan-keyed persist cache.
+"""Bounded session caches and the registry that invalidates them.
 
-Problem it solves: repeated query construction (the driver calls each
+Registry: every dictionary-derived cache registers a clear function and
+says whether its keys tell archive snapshots apart. Snapshot-keyed caches
+(the archive handles of plans/ingest.py, keyed by each manifest's
+`snapshot_id`) cannot go stale: a commit gives the archive a new key, so
+only an explicit `invalidate_dict_caches()` clears them. The others
+(plan-text keyed rows in plans/grep.py, fingerprint-keyed broadcasts in
+plans/pipeline.py) keep their key across a rewrite of the same paths, so
+the ingest paths clear them after every commit.
+
+`PlanCache` is a separate bounded, plan-keyed persist cache. Problem it
+solves: repeated query construction (the driver calls each
 queries() entry afresh; a user session re-runs the same search) builds the
 SAME analyzed plan each time. Naive `.persist()` relies on Spark's cache
 manager to dedupe by plan — which works, but never frees anything in a
@@ -21,40 +31,33 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
-# ---------------------------------------------------------------------------
-# Session-cache registry. Every dictionary-derived cache in the package
-# (collected dict rows in plans/grep.py, per-archive rows in plans/ingest.py,
-# dict broadcasts in plans/pipeline.py) registers a clear function here, and
-# the ingest paths call invalidate_dict_caches() after committing sinks —
-# re-ingesting into the same paths within one session therefore can never
-# serve stale dictionaries (plan-text / path cache keys stay identical across
-# a rewrite, so without this hook a re-ingest silently reuses old entries).
-# ---------------------------------------------------------------------------
-_DICT_CACHE_CLEARERS: list = []
+_DICT_CACHE_CLEARERS: list = []  # (clear_fn, snapshot_keyed)
 
 
-def register_dict_cache(clear_fn) -> None:
-    _DICT_CACHE_CLEARERS.append(clear_fn)
+def register_dict_cache(clear_fn, snapshot_keyed: bool = False) -> None:
+    _DICT_CACHE_CLEARERS.append((clear_fn, snapshot_keyed))
 
 
-def invalidate_dict_caches() -> None:
+def invalidate_dict_caches(keep_snapshot_keyed: bool = False) -> None:
     """Clear every registered dictionary-derived cache (collected rows,
-    broadcasts). Called by ingest()/ingest_json_archive after sink commit."""
-    for fn in list(_DICT_CACHE_CLEARERS):
-        fn()
+    broadcasts, archive handles). ingest()/ingest_json_archive pass
+    keep_snapshot_keyed=True after a sink commit: snapshot-keyed entries
+    cannot go stale, because the commit changes their key."""
+    for fn, keyed in list(_DICT_CACHE_CLEARERS):
+        if not (keep_snapshot_keyed and keyed):
+            fn()
 
 
 class RowsCache:
-    """Bounded LRU for driver-side collected values (dictionary rows).
+    """Bounded LRU for driver-side values (collected dictionary rows,
+    archive handles). `on_evict` releases what a value holds (e.g. its
+    broadcast) when the value is evicted or cleared."""
 
-    One implementation behind the previously-parallel caches in
-    plans/grep.py (plan-keyed) and plans/ingest.py (path-keyed); both now
-    clear together via the registry above."""
-
-    def __init__(self, max_items: int = 8):
+    def __init__(self, max_items: int = 8, on_evict=None, snapshot_keyed: bool = False):
         self.max_items = max_items
+        self._on_evict = on_evict
         self._store: OrderedDict = OrderedDict()
-        register_dict_cache(self.clear)
+        register_dict_cache(self.clear, snapshot_keyed)
 
     def get_or_load(self, key, loader):
         """Return the cached value for `key`, loading (and caching) on miss.
@@ -66,12 +69,17 @@ class RowsCache:
             self._store.move_to_end(key)
             return hit
         while len(self._store) >= self.max_items:
-            self._store.popitem(last=False)
+            self._evict(self._store.popitem(last=False)[1])
         value = self._store[key] = loader()
         return value
 
+    def _evict(self, value) -> None:
+        if self._on_evict is not None:
+            self._on_evict(value)
+
     def clear(self) -> None:
-        self._store.clear()
+        while self._store:
+            self._evict(self._store.popitem(last=False)[1])
 
 
 class PlanCache:

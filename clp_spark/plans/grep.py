@@ -366,6 +366,7 @@ def search(
     prune_vars: bool = False,
     lt_rows: list | None = None,
     vd_rows: list | None = None,
+    dict_bc=None,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
     """Full wildcard search -> (*key_cols, ts?, text) of matching rows.
@@ -379,6 +380,8 @@ def search(
     lt_rows / vd_rows: pre-collected dictionaries [(id, string), ...] —
     pass them to amortize dictionary loading across queries; otherwise they
     are collected here once per distinct dictionary plan (session cache).
+    dict_bc: a prebuilt pipeline.dict_broadcast of those rows (an archive
+    handle's), passed on to the dictmap decode.
     When the var dictionary exceeds DICT_BROADCAST_LIMIT, the WontMatch
     precheck and var pruning switch to DISTRIBUTED dictionary lookups (one
     dictionary scan each) instead of disabling themselves, and decode falls
@@ -393,15 +396,11 @@ def search(
     out_cols = list(key_cols) + (["ts"] if has_ts else [])
 
     def empty():
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [messages.schema[c] for c in out_cols]
-                + [StructField("text", StringType())]
-            ),
-        )
+        # Filter(false) folds to an empty LocalRelation in the optimizer, so
+        # running it launches no scan (createDataFrame([]) plans an RDD scan)
+        return messages.select(
+            *out_cols, F.lit(None).cast("string").alias("text")
+        ).where(F.lit(False))
 
     filtered = messages
     if begin_ts_ms is not None:
@@ -483,7 +482,7 @@ def search(
         from .pipeline import decode_messages_dictmap
 
         decoded = decode_messages_dictmap(
-            spark, filtered, lt_rows, vd_rows, key_cols=key_cols
+            spark, filtered, lt_rows, vd_rows, key_cols=key_cols, bc=dict_bc
         )
     else:
         decoded = decode_messages(filtered, logtype_dict, var_dict, key_cols=key_cols)

@@ -52,6 +52,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import RowsCache, invalidate_dict_caches
 from . import pipeline as P
 
 MANIFEST = "_manifest.json"
@@ -95,6 +96,13 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(tmp, _manifest_path(out_dir))
+
+
+def _write_snapshot(out_dir: str, manifest: dict) -> None:
+    """Write the manifest under a fresh snapshot id: the archive's files
+    changed, so open_archives() keys it afresh."""
+    manifest["snapshot_id"] = uuid.uuid4().hex
+    _write_manifest(out_dir, manifest)
 
 
 def _commit(df_writer_fn, out_dir: str, step: str, step_secs: dict | None = None) -> str:
@@ -231,7 +239,7 @@ def ingest(
             steps["messages"] = {"n_turns": obs.get["n_turns"]}
             manifest["metrics"]["n_turns"] = obs.get["n_turns"]
             manifest["metrics"]["uncompressed_bytes"] = obs.get["uncompressed_bytes"]
-            _write_manifest(out_dir, manifest)
+            _write_snapshot(out_dir, manifest)
 
         if want("logtype_dict"):
             _commit(
@@ -244,7 +252,7 @@ def ingest(
                 step_secs,
             )
             steps["logtype_dict"] = True
-            _write_manifest(out_dir, manifest)
+            _write_snapshot(out_dir, manifest)
 
         if want("var_dict"):
             _commit(
@@ -257,23 +265,18 @@ def ingest(
                 step_secs,
             )
             steps["var_dict"] = True
-            _write_manifest(out_dir, manifest)
+            _write_snapshot(out_dir, manifest)
 
-        # Count sinks + lineage are derived from the MESSAGES SINK with
-        # column-pruned scans (the reducer re-expressed: partial agg on
-        # executors, final agg after a tiny shuffle).
-        lt_dict = (
-            spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-            if want("counts_logtype")
-            else None
-        )
-
+        # Per-logtype counts are the logtype dictionary's n_messages (the
+        # coalesce keeps `cnt` non-nullable, as a count is; a parquet read
+        # marks every column nullable). The other count sinks + lineage are
+        # derived from the MESSAGES SINK with column-pruned scans (the
+        # reducer re-expressed: partial agg on executors, final agg after a
+        # tiny shuffle).
         builders = {
-            "counts_logtype": lambda: sink("logtype_id")
-            .groupBy("logtype_id")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .join(F.broadcast(lt_dict.select("logtype_id", "logtype")), "logtype_id")
-            .select("logtype", "cnt"),
+            "counts_logtype": lambda: spark.read.parquet(
+                os.path.join(out_dir, "logtype_dict")
+            ).select("logtype", F.coalesce("n_messages", F.lit(0)).alias("cnt")),
             "counts_tool": lambda: sink("tool")
             .groupBy("tool")
             .agg(F.count(F.lit(1)).alias("cnt")),
@@ -307,7 +310,7 @@ def ingest(
                 step_secs,
             )
             steps[step] = True
-            _write_manifest(out_dir, manifest)
+            _write_snapshot(out_dir, manifest)
     finally:
         if cache_parsed:
             dict_src.unpersist()
@@ -343,13 +346,11 @@ def ingest(
     manifest["metrics"]["wall_sec"] = round(time.time() - t_start, 3)
     _write_manifest(out_dir, manifest)
     if set(steps) - resumed_steps:
-        # Sinks changed: drop every session dictionary cache (collected rows
-        # + broadcasts) so a re-ingest into the same paths can never serve
-        # stale dictionaries to search()/decode (cache keys are plan-text /
-        # path based and identical across a rewrite).
-        from ..caching import invalidate_dict_caches
-
-        invalidate_dict_caches()
+        # Sinks changed: drop the caches whose plan-text / fingerprint keys
+        # are identical across a rewrite of the same paths, so a re-ingest
+        # can never serve them stale. Archive handles stay: the new
+        # snapshot id already keys this archive afresh.
+        invalidate_dict_caches(keep_snapshot_keyed=True)
     return manifest
 
 
@@ -378,7 +379,8 @@ def compact_bucket(
 ) -> None:
     """Size-tiered compaction of one logtype bucket (analog of glt packing
     small per-logtype tables into combined tables). Rewrites the bucket's
-    files into `target_files` files via staging + atomic rename."""
+    files into `target_files` files via staging + atomic rename, under a
+    fresh snapshot id (open handles hold the old file listing)."""
     bucket_dir = os.path.join(out_dir, "messages", f"logtype_bucket={bucket}")
     staging = bucket_dir + ".compact"
     shutil.rmtree(staging, ignore_errors=True)
@@ -392,6 +394,7 @@ def compact_bucket(
     os.replace(bucket_dir, old)
     os.replace(staging, bucket_dir)
     shutil.rmtree(old)
+    _write_snapshot(out_dir, read_manifest(out_dir))
 
 
 def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -402,25 +405,85 @@ def decode_archive(spark: SparkSession, out_dir: str) -> DataFrame:
     when the var dictionary is collectible (the reference decompressor's
     model: dictionaries load fully before reading segments), else the
     broadcast-join decode."""
-    from .grep import DICT_BROADCAST_LIMIT
+    from .grep import _TOO_BIG
 
-    msgs = spark.read.parquet(os.path.join(out_dir, "messages"))
-    lt = spark.read.parquet(os.path.join(out_dir, "logtype_dict"))
-    vd = spark.read.parquet(os.path.join(out_dir, "var_dict"))
-    sample = vd.select("var_id", "var_str").limit(DICT_BROADCAST_LIMIT + 1).collect()
-    if len(sample) <= DICT_BROADCAST_LIMIT:
-        return P.decode_messages_dictmap(
-            spark,
-            msgs,
-            [(r["logtype_id"], r["logtype"]) for r in lt.select("logtype_id", "logtype").collect()],
-            [(r["var_id"], r["var_str"]) for r in sample],
+    h = open_archives(spark, [out_dir])
+    if h.vd_rows is _TOO_BIG:
+        return P.decode_messages(h.msgs, h.lt, h.vd)
+    return P.decode_messages_dictmap(spark, h.msgs, h.lt_rows, h.vd_rows, bc=h.broadcast())
+
+
+class ArchiveHandle:
+    """A set of archive snapshots opened for reading: the unioned messages
+    and dictionaries (read once, so their schema inference and file listing
+    run once), the collected logtype rows, the var rows (or grep._TOO_BIG)
+    and the dictmap broadcast, built on first use. The reference
+    decompressor likewise loads an archive's dictionaries once and then
+    only reads segments (clp/streaming_archive/reader/Archive.cpp:163-195).
+    """
+
+    def __init__(self, spark: SparkSession, dirs: list[str], cached: bool):
+        from functools import reduce
+
+        from .grep import _TOO_BIG, DICT_BROADCAST_LIMIT
+
+        def union_read(sub: str) -> DataFrame:
+            # per-archive reads + union: each partitioned root keeps its own
+            # partition discovery (one multi-root read would conflict)
+            parts = [spark.read.parquet(os.path.join(d, sub)) for d in dirs]
+            return reduce(DataFrame.unionByName, parts)
+
+        self.spark = spark
+        self.msgs = union_read("messages")
+        self.lt = union_read("logtype_dict")
+        self.vd = union_read("var_dict").select("var_id", "var_str")
+        if len(dirs) > 1:
+            # content-hash ids are global: one entry per id across archives
+            self.lt = self.lt.select("logtype_id", "logtype", "var_kinds").dropDuplicates(
+                ["logtype_id"]
+            )
+            self.vd = self.vd.dropDuplicates(["var_id"])
+        self.lt_rows = [
+            (r["logtype_id"], r["logtype"])
+            for r in self.lt.select("logtype_id", "logtype").collect()
+        ]
+        sample = self.vd.limit(DICT_BROADCAST_LIMIT + 1).collect()
+        self.vd_rows = (
+            [(r["var_id"], r["var_str"]) for r in sample]
+            if len(sample) <= DICT_BROADCAST_LIMIT
+            else _TOO_BIG  # search() then uses DISTRIBUTED dict lookups
         )
-    return P.decode_messages(msgs, lt, vd)
+        self._cached = cached
+        self._bc = None
+
+    def broadcast(self):
+        """The dictmap broadcast. A cached handle owns its own (unpersisted
+        on eviction); an uncached one borrows from the fingerprint cache."""
+        if self._bc is None:
+            build = P.dict_broadcast if self._cached else P._dict_broadcast
+            self._bc = build(self.spark, self.lt_rows, self.vd_rows)
+        return self._bc
+
+    def close(self) -> None:
+        if self._bc is not None:
+            self._bc.unpersist()
 
 
-from ..caching import RowsCache
+_HANDLES = RowsCache(max_items=8, on_evict=ArchiveHandle.close, snapshot_keyed=True)
 
-_DICT_CACHE = RowsCache(max_items=8)
+
+def open_archives(spark: SparkSession, dirs: list[str]) -> ArchiveHandle:
+    """The ArchiveHandle of `dirs`, shared while every archive keeps its
+    snapshot. Keyed by (realpath, manifest snapshot_id) per archive: every
+    commit into an archive mints a new snapshot id, so a rewritten archive
+    can never be served from a stale handle. An archive whose manifest has
+    no snapshot id (written before ids existed) opens uncached."""
+    key = tuple(
+        (os.path.realpath(d), read_manifest(d).get("snapshot_id")) for d in dirs
+    )
+    if any(sid is None for _, sid in key):
+        return ArchiveHandle(spark, dirs, cached=False)
+    return _HANDLES.get_or_load(key, lambda: ArchiveHandle(spark, dirs, cached=True))
 
 
 def select_archives(
@@ -465,51 +528,20 @@ def search_archives(
     """Wildcard search across selected archives (the clg-over-many-archives
     path). Content-hash ids are globally deterministic, so unioned messages
     join unioned (deduplicated) dictionaries directly."""
-    from .grep import search
+    from .grep import _TOO_BIG, search
 
     dirs = select_archives(
         archive_dirs, tags=tags, begin_ts_ms=begin_ts_ms, end_ts_ms=end_ts_ms
     )
     if not dirs:
         raise ValueError("no archive matches the selection")
-    from functools import reduce
-
-    def union_read(sub: str) -> DataFrame:
-        # per-archive reads + union: each partitioned root keeps its own
-        # partition discovery (one multi-root read would conflict)
-        parts = [spark.read.parquet(os.path.join(d, sub)) for d in dirs]
-        return reduce(DataFrame.unionByName, parts)
-
-    msgs = union_read("messages")
-    lt = (
-        union_read("logtype_dict")
-        .select("logtype_id", "logtype", "var_kinds")
-        .dropDuplicates(["logtype_id"])
-    )
-    vd = union_read("var_dict").select("var_id", "var_str").dropDuplicates(["var_id"])
-
-    # Per-archive-set dictionary cache: archives are immutable snapshots, so
-    # repeated queries skip the collect (the reference keeps per-archive
-    # dictionaries resident across searches too). Shared RowsCache — cleared
-    # automatically when ingest() rewrites an archive in-session.
-    def load_rows():
-        from .grep import _TOO_BIG, DICT_BROADCAST_LIMIT
-
-        lt_rows = [(r["logtype_id"], r["logtype"]) for r in lt.collect()]
-        sample = vd.limit(DICT_BROADCAST_LIMIT + 1).collect()
-        vd_rows = (
-            [(r["var_id"], r["var_str"]) for r in sample]
-            if len(sample) <= DICT_BROADCAST_LIMIT
-            else _TOO_BIG  # search() then uses DISTRIBUTED dict lookups
-        )
-        return (lt_rows, vd_rows)
-
-    lt_rows, vd_rows = _DICT_CACHE.get_or_load(tuple(dirs), load_rows)
-
+    h = open_archives(spark, dirs)
     return search(
-        msgs, lt, vd, query,
+        h.msgs, h.lt, h.vd, query,
         begin_ts_ms=begin_ts_ms, end_ts_ms=end_ts_ms,
-        lt_rows=lt_rows, vd_rows=vd_rows, **search_kw,
+        lt_rows=h.lt_rows, vd_rows=h.vd_rows,
+        dict_bc=None if h.vd_rows is _TOO_BIG else h.broadcast(),
+        **search_kw,
     )
 
 

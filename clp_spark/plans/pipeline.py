@@ -230,7 +230,9 @@ def route(parsed: DataFrame, n_buckets: int = 16, n_salts: int = 8) -> DataFrame
         "salt",
         F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts)).cast("int"),
     )
-    return routed.repartition("logtype_bucket", "salt")
+    # An explicit width: spark.sql.shuffle.partitions follows the host's
+    # core count, and fewer partitions than salts would cap the spread.
+    return routed.repartition(n_buckets * n_salts, "logtype_bucket", "salt")
 
 
 def encoded_messages(parsed: DataFrame) -> DataFrame:
@@ -432,8 +434,10 @@ def parse_encode_with_schema(
 # session reuse the shipped dictionary maps instead of leaking one broadcast
 # per query. Keyed by a content fingerprint (sizes + boundary ids) — cheap,
 # and collision-safe in practice since dictionaries are content-hashed.
-# Registered with the shared cache registry: cleared (broadcasts unpersisted)
-# when ingest() rewrites sinks in-session.
+# Archive reads bypass it: their handle (plans/ingest.py) owns a broadcast
+# keyed by the archive's snapshot id. Registered with the shared cache
+# registry: cleared (broadcasts unpersisted) when ingest() rewrites sinks
+# in-session.
 _BC_CACHE: dict = {}
 _BC_CACHE_MAX = 4
 
@@ -449,10 +453,20 @@ from ..caching import register_dict_cache as _register_dict_cache  # noqa: E402
 _register_dict_cache(_clear_bc_cache)
 
 
-def _dict_broadcast(spark, logtype_rows, var_rows):
+def dict_broadcast(spark, logtype_rows, var_rows):
     """Broadcast pre-built decode structures (templates split once, var
-    dictionary as sorted arrays) — executors never re-derive them per task."""
+    dictionary as sorted arrays) — executors never re-derive them per task.
+    Uncached: the caller owns (and unpersists) it."""
     from ..functions.render_vec import DictLookup, TemplateTable
+
+    return spark.sparkContext.broadcast(
+        (TemplateTable(logtype_rows), DictLookup(var_rows))
+    )
+
+
+def _dict_broadcast(spark, logtype_rows, var_rows):
+    """dict_broadcast through the fingerprint-keyed session cache, for
+    callers that hold raw rows rather than an archive handle."""
 
     def fp(rows):
         head = tuple(int(r[0]) for r, _ in zip(iter(rows), range(3)))
@@ -465,10 +479,7 @@ def _dict_broadcast(spark, logtype_rows, var_rows):
     if len(_BC_CACHE) >= _BC_CACHE_MAX:
         _, old = _BC_CACHE.popitem()
         old.unpersist()
-    bc = spark.sparkContext.broadcast(
-        (TemplateTable(logtype_rows), DictLookup(var_rows))
-    )
-    _BC_CACHE[key] = bc
+    bc = _BC_CACHE[key] = dict_broadcast(spark, logtype_rows, var_rows)
     return bc
 
 
@@ -478,6 +489,7 @@ def decode_messages_dictmap(
     logtype_rows,
     var_rows,
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+    bc=None,
 ) -> DataFrame:
     """Shuffle-free decode: dictionaries travel to executors as ONE Spark
     broadcast (templates pre-split, var dictionary as sorted arrays) and the
@@ -494,9 +506,12 @@ def decode_messages_dictmap(
     otherwise use decode_messages (broadcast-join based).
 
     logtype_rows: iterable of (logtype_id, logtype);
-    var_rows: iterable of (var_id, var_str).
+    var_rows: iterable of (var_id, var_str);
+    bc: their prebuilt dict_broadcast (an archive handle's), else one comes
+    from the fingerprint-keyed cache.
     """
-    bc = _dict_broadcast(spark, list(logtype_rows), list(var_rows))
+    if bc is None:
+        bc = _dict_broadcast(spark, list(logtype_rows), list(var_rows))
 
     has_ts = "ts" in messages.columns and "ts" not in key_cols
     passthrough = list(key_cols) + (["ts"] if has_ts else [])

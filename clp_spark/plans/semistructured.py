@@ -1231,10 +1231,11 @@ def ingest_json_archive(
     with open(os.path.join(out_dir, "_manifest.json"), "w") as f:
         _json.dump(manifest, f, indent=2, sort_keys=True)
     # sinks rewritten: stale collected/broadcast dictionaries must not
-    # survive a same-path re-ingest within this session
+    # survive a same-path re-ingest within this session (snapshot-keyed
+    # archive handles cannot go stale and stay)
     from ..caching import invalidate_dict_caches
 
-    invalidate_dict_caches()
+    invalidate_dict_caches(keep_snapshot_keyed=True)
     return manifest
 
 
